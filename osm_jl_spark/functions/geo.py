@@ -1,12 +1,15 @@
-"""Geometry kernels: exact point-in-polygon (vectorized), polygon cell
-covers, and coordinate transforms.
+"""Geometry kernels: exact point-in-polygon (native column
+expressions), polygon cell covers, and coordinate transforms.
 
 PIP reproduces the reference's even-odd ray casting bit-for-bit
 (/root/reference/src/coords.jl:69-78): closing edge first, strict
-``>`` / ``<`` comparisons, open ring. It runs as an Arrow-batched
-pandas UDF over NumPy (no per-row Python), with the polygon set packed
-into flat NumPy arrays captured in the UDF closure — Spark ships the
-closure once per executor, which is the broadcast.
+``>`` / ``<`` comparisons, open ring. It is built from Spark column
+expressions with no Python at run time, in two shapes: an unrolled
+per-edge sum with the edges as literals (:func:`pip_ring_expr`, the
+small-polygon-set path) and an ``F.aggregate`` fold over a broadcast
+edge array (:func:`pip_edges_fold_expr`, the many-polygon path).
+``oracle.point_in_polygon`` is the scalar reference both are tested
+against.
 
 The scale story (SURVEY.md §4 custom work #1): computing exact PIP for
 every (point, polygon) pair is O(N·P·V) and unusable at 10^12 docs.
@@ -14,127 +17,28 @@ every (point, polygon) pair is O(N·P·V) and unusable at 10^12 docs.
 (entirely inside) or BOUNDARY (edge passes through); the spatial join
 then broadcast-joins points to cover cells on (cx, cy) — a native
 hash join Catalyst handles — accepts FULL matches outright, and runs
-the exact UDF only on BOUNDARY candidates, typically <5% of matches.
+the exact test only on BOUNDARY candidates, typically <5% of matches.
 """
 
 from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from osm_jl_spark.oracle import point_in_polygon
 
 Ring = list[tuple[float, float]]
 
 
-def _ring_arrays(ring: Ring) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Edge arrays (ax, ay, bx, by) with the closing edge first,
+def ring_edges(ring: Ring) -> list[tuple[float, float, float, float]]:
+    """Edges (ax, ay, bx, by) as doubles with the closing edge first,
     matching ``zip([P[end]; P[1:end-1]], P)`` (src/coords.jl:70)."""
-    b = np.asarray(ring, dtype=np.float64)
-    a = np.roll(b, 1, axis=0)
-    return a[:, 0], a[:, 1], b[:, 0], b[:, 1]
-
-
-def pip_mask(lon: np.ndarray, lat: np.ndarray, ring: Ring) -> np.ndarray:
-    """Vectorized even-odd test: bool mask over points (src/coords.jl:69-78)."""
-    ax, ay, bx, by = _ring_arrays(ring)
-    lon = np.asarray(lon, dtype=np.float64)[:, None]  # (N,1)
-    lat = np.asarray(lat, dtype=np.float64)[:, None]
-    crosses = (ay[None, :] > lat) != (by[None, :] > lat)  # (N,V)
-    # divide/overflow/invalid all arise only on non-crossing edges
-    # (by == ay or subnormal spans), where `crosses` masks the result —
-    # Julia's short-circuit && never evaluates them (src/coords.jl:74)
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        x = ax[None, :] + (lat - ay[None, :]) / (by[None, :] - ay[None, :]) * (
-            bx[None, :] - ax[None, :]
-        )
-        hit = crosses & (x < lon)
-    # odd number of crossings -> inside (XOR accumulation)
-    return (hit.sum(axis=1) % 2).astype(bool)
-
-
-def pip_contains_udf(polygons: dict[int, Ring]):
-    """pandas UDF: (lon, lat) -> array<long> of polygon ids containing
-    the point. The polygon dict rides in the closure (broadcast once
-    per executor); explode the result to get join rows."""
-    items = [(pid, ring) for pid, ring in sorted(polygons.items())]
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _pip(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        lo = lon.to_numpy(dtype=np.float64)
-        la = lat.to_numpy(dtype=np.float64)
-        n = len(lo)
-        hits: list[list[int]] = [[] for _ in range(n)]
-        for pid, ring in items:
-            m = pip_mask(lo, la, ring)
-            for i in np.nonzero(m)[0]:
-                hits[i].append(pid)
-        return pd.Series(hits)
-
-    return _pip
-
-
-def pip_test_udf(polygons: dict[int, Ring]):
-    """pandas UDF: (lon, lat, polygon_id) -> bool. Used on BOUNDARY-cell
-    candidates after the cover join, grouped per polygon inside the
-    batch for vectorization."""
-    polys = dict(polygons)
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-        lo = lon.to_numpy(dtype=np.float64)
-        la = lat.to_numpy(dtype=np.float64)
-        ids = pid.to_numpy()
-        out = np.zeros(len(lo), dtype=bool)
-        for p in np.unique(ids):
-            ring = polys.get(int(p))
-            if ring is None:
-                continue
-            sel = ids == p
-            out[sel] = pip_mask(lo[sel], la[sel], ring)
-        return pd.Series(out)
-
-    return _pip
-
-
-def pip_test_or_full_udf(polygons: dict[int, Ring]):
-    """pandas UDF: (lon, lat, polygon_id, is_full) -> bool.
-
-    Single-pass variant for the cover join: FULL-cell rows short-circuit
-    to True with zero geometry work (a vectorized mask skip); only
-    boundary rows run the even-odd test. Spark extracts Python UDFs out
-    of filters and evaluates them for EVERY input row, so pushing the
-    short-circuit inside the UDF is the only way to keep one pipeline
-    pass — a two-branch filter+union would re-execute the whole
-    upstream (geoparse etc.) once per branch.
-    """
-    polys = dict(polygons)
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(lon: pd.Series, lat: pd.Series, pid: pd.Series,
-             is_full: pd.Series) -> pd.Series:
-        full = is_full.to_numpy(dtype=bool)
-        out = full.copy()
-        bsel = ~full
-        if bsel.any():
-            lo = lon.to_numpy(dtype=np.float64)[bsel]
-            la = lat.to_numpy(dtype=np.float64)[bsel]
-            ids = pid.to_numpy()[bsel]
-            res = np.zeros(len(lo), dtype=bool)
-            for p in np.unique(ids):
-                ring = polys.get(int(p))
-                if ring is None:
-                    continue
-                sel = ids == p
-                res[sel] = pip_mask(lo[sel], la[sel], ring)
-            out[bsel] = res
-        return pd.Series(out)
-
-    return _pip
+    return [
+        (float(ring[i - 1][0]), float(ring[i - 1][1]),
+         float(ring[i][0]), float(ring[i][1]))
+        for i in range(len(ring))
+    ]
 
 
 def pip_ring_expr(ring: Ring, lon, lat):
@@ -149,19 +53,16 @@ def pip_ring_expr(ring: Ring, lon, lat):
     expression stays well inside codegen limits. Edge constants are
     literals; ``(lat - ay) / (by - ay) * (bx - ax)`` keeps the exact
     IEEE op order of the reference (constant subexpressions fold to
-    the same doubles), so bit-parity with pip_mask/the oracle port
-    holds — pinned by tests. The division is ``try_divide``: by == ay
+    the same doubles), so bit-parity with the oracle port holds —
+    pinned by tests. The division is ``try_divide``: by == ay
     only on horizontal edges, where ``crosses`` is always false, but
     under ANSI mode a bare / would raise DIVIDE_BY_ZERO if an
     optimizer reordering ever evaluated it first — try_divide yields
     NULL there and ``false & NULL = false``, safe in ANY evaluation
     order (identical quotient on every crossing edge).
     """
-    axs, ays, bxs, bys = _ring_arrays(ring)
     total = F.lit(0)
-    for ax, ay, bx, by in zip(
-        axs.tolist(), ays.tolist(), bxs.tolist(), bys.tolist()
-    ):
+    for ax, ay, bx, by in ring_edges(ring):
         crosses = (F.lit(ay) > lat) != (F.lit(by) > lat)
         x = F.lit(ax) + F.try_divide(
             lat - F.lit(ay), F.lit(by) - F.lit(ay)
@@ -197,10 +98,8 @@ def pip_test_or_full_expr(polygons: dict[int, Ring], lon, lat, pid, is_full):
     """NATIVE single-pass cover-join test: FULL cells short-circuit to
     true, boundary cells run the per-polygon unrolled even-odd
     expression (dispatched by a CASE over the small polygon set;
-    see pip_ring_expr for why it is unrolled, not a fold). Replaces
-    pip_test_or_full_udf in the default plan — the whole spatial join
-    is then Python-free; the UDF stays as the parity reference and the
-    path for polygon sets too large to inline as literals.
+    see pip_ring_expr for why it is unrolled, not a fold). Used up to
+    joins.UNROLL_LIMIT polygons; larger sets take pip_edges_fold_expr.
     """
     if not polygons:  # no CASE to build; only FULL cells can match
         return is_full

@@ -11,7 +11,8 @@ to answer):
 - J4 polygon extract: the candidate set comes from a BROADCAST hash
   join on (cx, cy) against the polygon cell cover (a few-thousand-row
   dimension), so the 10^12-point fact table never shuffles; the exact
-  PIP pandas UDF touches only boundary-cell candidates.
+  even-odd test (native column expressions) touches only boundary-cell
+  candidates.
 - J6 bbox: a pure cell-range filter — on a cell-clustered table this
   is partition pruning + row-group skipping, zero shuffle
   (src/OSM.jl:246-257 semantics; the reference's unfiltered-ways TODO
@@ -29,8 +30,14 @@ from osm_jl_spark.functions.geo import (
     cell_cover,
     pip_edges_fold_expr,
     pip_test_or_full_expr,
-    pip_test_or_full_udf,
+    ring_edges,
 )
+
+# Up to this many polygons the exact test is the unrolled per-edge
+# codegen CASE (fastest for small sets); above it the CASE's plan size
+# and branch chain grow until codegen gives up, so nodes_in_polygons
+# folds a broadcast edge array instead.
+UNROLL_LIMIT = 32
 
 
 def explode_way_refs(ways: DataFrame) -> DataFrame:
@@ -134,8 +141,6 @@ def nodes_in_polygons(
     precision: int = 2,
     lon: str = "lon",
     lat: str = "lat",
-    exact: str = "native",
-    unroll_limit: int = 32,
 ) -> DataFrame:
     """J3 (src/OSM.jl:210-218) as a scalable spatial join.
 
@@ -149,15 +154,11 @@ def nodes_in_polygons(
     points this is a map-side-only pipeline: no shuffle of the fact
     table at all.
 
-    ``exact`` picks the boundary-candidate test:
-    - "native" (default): <= unroll_limit polygons use the UNROLLED
-      per-edge codegen CASE (fastest for small sets); larger sets
-      switch to "edges" automatically — the CASE's plan size and
-      branch chain grow with the polygon count until codegen gives up.
-    - "edges": broadcast a (polygon_id, edges array) dim and fold it
-      with F.aggregate — interpreted, but O(own edges) per row and
-      constant plan size; the many-polygon scale path.
-    - "udf": the Arrow/NumPy parity kernel.
+    The polygon count picks the boundary-candidate test: up to
+    UNROLL_LIMIT polygons, the UNROLLED per-edge codegen CASE
+    (pip_test_or_full_expr); above it, a broadcast (polygon_id, edges
+    array) dim folded with F.aggregate (pip_edges_fold_expr) —
+    interpreted, but O(own edges) per row and constant plan size.
     """
     from osm_jl_spark.functions.geo import COVER_BUDGET, cell_bbox_range
 
@@ -259,31 +260,16 @@ def nodes_in_polygons(
         )
     )
     # Single pass: FULL-cell rows short-circuit to true, boundary rows
-    # run the exact even-odd test via the mode picked in the docstring
-    # (unrolled codegen CASE / edges-array fold / Arrow parity kernel).
-    if exact == "native" and len(polygons) > unroll_limit:
-        exact = "edges"
-    if exact == "native":
+    # run the exact even-odd test (unrolled CASE or edges-array fold).
+    drop = ["is_full", "cx", "cy", "bminx", "bmaxx", "bminy", "bmaxy"]
+    if len(polygons) <= UNROLL_LIMIT:
         keep = pip_test_or_full_expr(
             polygons, F.col(lon), F.col(lat),
             F.col("polygon_id"), F.col("is_full"),
         )
-    elif exact == "edges":
-        edge_rows = []
-        for pid, ring in sorted(polygons.items()):
-            n = len(ring)
-            edge_rows.append((
-                pid,
-                [
-                    (
-                        float(ring[i - 1][0]), float(ring[i - 1][1]),
-                        float(ring[i][0]), float(ring[i][1]),
-                    )
-                    for i in range(n)
-                ],
-            ))
+    else:
         edims = spark.createDataFrame(
-            edge_rows,
+            [(pid, ring_edges(ring)) for pid, ring in sorted(polygons.items())],
             "polygon_id BIGINT, edges ARRAY<STRUCT<"
             "ax: DOUBLE, ay: DOUBLE, bx: DOUBLE, by: DOUBLE>>",
         )
@@ -291,19 +277,8 @@ def nodes_in_polygons(
         keep = F.col("is_full") | pip_edges_fold_expr(
             F.col(lon), F.col(lat), F.col("edges")
         )
-        return cand.filter(keep).drop(
-            "ccx", "ccy", "is_full", "cx", "cy",
-            "bminx", "bmaxx", "bminy", "bmaxy", "edges",
-        )
-    else:
-        test = pip_test_or_full_udf(polygons)
-        keep = test(
-            F.col(lon), F.col(lat), F.col("polygon_id"), F.col("is_full")
-        )
-    return cand.filter(keep).drop(
-        "ccx", "ccy", "is_full", "cx", "cy",
-        "bminx", "bmaxx", "bminy", "bmaxy",
-    )
+        drop.append("edges")
+    return cand.filter(keep).drop(*drop)
 
 
 def ways_in_polygon(
@@ -316,8 +291,8 @@ def ways_in_polygon(
     """J4 (src/OSM.jl:225-239): ways with ANY node inside the polygon.
 
     The reference's O(W·N) nested membership scan becomes: PIP-filter
-    nodes (cell-cover prefilter + exact UDF) -> explode way refs ->
-    left-semi join on the inside-node ids. Returns the way rows.
+    nodes (cell-cover prefilter + exact even-odd test) -> explode way
+    refs -> left-semi join on the inside-node ids. Returns the way rows.
     """
     inside = nodes_in_polygons(
         nodes.select("id", "lon", "lat"), {polygon_id: ring}, precision

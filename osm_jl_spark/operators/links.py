@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from osm_jl_spark.operators.web import url_host
 
@@ -226,14 +227,16 @@ def triangle_census(
     count.
     """
     a, b = F.col(a_col), F.col(b_col)
-    und = (
-        edges.select(
-            F.least(a, b).alias("x"), F.greatest(a, b).alias("y")
-        )
-        .where((F.col("x") != F.col("y"))
-               & (F.col("x") != "") & (F.col("y") != ""))
-        .distinct()
+    pairs = edges.select(
+        F.least(a, b).alias("x"), F.greatest(a, b).alias("y")
     )
+    x, y = F.col("x"), F.col("y")
+    keep = (x != y) & x.isNotNull() & y.isNotNull()
+    if isinstance(pairs.schema["x"].dataType, T.StringType):
+        # "" is the missing-host marker of string vertex ids; comparing
+        # a numeric id with "" would be a cast error under ANSI
+        keep = keep & (x != "") & (y != "")
+    und = pairs.where(keep).distinct()
     deg = (
         und.select(F.explode(F.array("x", "y")).alias("h"))
         .groupBy("h").agg(F.count(F.lit(1)).alias("d"))

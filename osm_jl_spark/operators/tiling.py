@@ -82,10 +82,10 @@ def tile_rollup(
     requested precision (native inline array — no UDF), then one salted
     two-stage aggregation covers every level. A per-level loop would
     re-execute the whole upstream (at the flagship this includes the
-    geoparse pandas UDF) once per level; exploding trades that for
-    len(precisions)x more rows into the map-side partial aggregation,
-    which shrinks them to per-(cell,salt) partials before the shuffle —
-    strictly cheaper at scale.
+    geoparse regexp over every page) once per level; exploding trades
+    that for len(precisions)x more rows into the map-side partial
+    aggregation, which shrinks them to per-(cell,salt) partials before
+    the shuffle — strictly cheaper at scale.
 
     Each level re-encodes from the raw coordinate (trunc cells do not
     nest arithmetically across zero — functions/cells.py docstring), so

@@ -14,8 +14,8 @@ load-bearing (SURVEY.md §7.3):
   (first vertex not repeated; /root/reference/README.md:63-64).
 
 Plus the byte-identical text-extraction + geoparse pair used to verify
-the Spark pandas UDFs (BASELINE.json input_hint: "byte-identical
-extracted text per url").
+the native Spark text kernels (BASELINE.json input_hint:
+"byte-identical extracted text per url").
 """
 
 from __future__ import annotations
@@ -65,14 +65,14 @@ _WS_RE = re.compile(rb"\s+")
 
 # [0-9] not \d: Python-str \d matches Unicode digits while Java regex
 # \d (the native geoparse kernel) matches ASCII only — spelling out the
-# class makes UDF/native/oracle parity definitional on real web text.
+# class makes native/oracle parity definitional on real web text.
 GEO_RE = re.compile(r"lat (-?[0-9]+\.[0-9]{5}) lon (-?[0-9]+\.[0-9]{5})")
 
 
 def extract_text(html: bytes) -> str:
     """Deterministic tag-strip text extraction from an HTML payload.
 
-    The Spark-side pandas UDF (functions/text.py:extract_text_udf) must
+    The native Spark kernel (functions/text.py:extract_text_col) must
     produce byte-identical output for every url — pytest asserts it.
     """
     no_tags = _TAG_RE.sub(b" ", html)

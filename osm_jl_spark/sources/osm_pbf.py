@@ -68,6 +68,12 @@ def _zigzag(n: int) -> int:
     return (n >> 1) ^ -(n & 1)
 
 
+def _int64(v: int) -> int:
+    """Decoded int64 field: values >= 2^63 are negative numbers in
+    64-bit two's complement."""
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
 def _fields(buf: bytes) -> Iterator[tuple[int, int, object]]:
     """Yield (field_number, wire_type, value) over one message.
     wire 0 -> int, wire 2 -> bytes, wire 5/1 -> raw fixed bytes."""
@@ -99,6 +105,9 @@ def _packed(buf: bytes, signed: bool = False) -> list[int]:
 
 
 def _enc_uvarint(n: int) -> bytes:
+    if n < 0:
+        # n >>= 7 never reaches 0 for a negative int: fail, not spin
+        raise ValueError(f"uvarint {n} is negative")
     out = bytearray()
     while True:
         b = n & 0x7F
@@ -116,6 +125,14 @@ def _enc_zigzag(n: int) -> bytes:
         # further apart than 2^63) is unrepresentable in the format
         raise ValueError(f"delta {n} outside sint64 range")
     return _enc_uvarint((n << 1) ^ (n >> 63))
+
+
+def _enc_int64(n: int) -> bytes:
+    """int64 field: negative values go on the wire as 64-bit two's
+    complement, as protobuf encodes them."""
+    if not -(1 << 63) <= n < (1 << 63):
+        raise ValueError(f"{n} outside int64 range")
+    return _enc_uvarint(n & ((1 << 64) - 1))
 
 
 def _enc_field(field: int, wire: int, payload: bytes) -> bytes:
@@ -195,9 +212,9 @@ def _decode_block(payload: bytes) -> list[dict]:
         elif field == 17:
             gran = int(v)
         elif field == 19:
-            lat_off = int(v)
+            lat_off = _int64(v)
         elif field == 20:
-            lon_off = int(v)
+            lon_off = _int64(v)
 
     def coord(off: int, g: int, units: int) -> float:
         return 1e-9 * (off + g * units)
@@ -239,7 +256,7 @@ def _decode_block(payload: bytes) -> list[dict]:
                 wid, keys, vals, refs = 0, [], [], []
                 for f2, _, v2 in _fields(v):
                     if f2 == 1:
-                        wid = int(v2)
+                        wid = _int64(v2)
                     elif f2 == 2:
                         keys = _packed(v2)
                     elif f2 == 3:
@@ -262,7 +279,7 @@ def _decode_block(payload: bytes) -> list[dict]:
                 roles, memids, types = [], [], []
                 for f2, _, v2 in _fields(v):
                     if f2 == 1:
-                        rid = int(v2)
+                        rid = _int64(v2)
                     elif f2 == 2:
                         keys = _packed(v2)
                     elif f2 == 3:
@@ -407,7 +424,7 @@ def _enc_block(elements: list[dict]) -> bytes:
                 prev = ref
             tags = e.get("tags", {})
             msg = (
-                _enc_field(1, 0, _enc_uvarint(e["id"]))
+                _enc_field(1, 0, _enc_int64(e["id"]))
                 + _enc_packed(2, [idx[k] for k in tags])
                 + _enc_packed(3, [idx[v] for v in tags.values()])
                 + _enc_packed(8, deltas, signed=True)
@@ -421,7 +438,7 @@ def _enc_block(elements: list[dict]) -> bytes:
                 prev = m["ref"]
             tags = e.get("tags", {})
             msg = (
-                _enc_field(1, 0, _enc_uvarint(e["id"]))
+                _enc_field(1, 0, _enc_int64(e["id"]))
                 + _enc_packed(2, [idx[k] for k in tags])
                 + _enc_packed(3, [idx[v] for v in tags.values()])
                 + _enc_packed(8, [idx[m.get("role", "")] for m in members])

@@ -142,3 +142,41 @@ def test_unsupported_required_feature_rejected(spark, tmp_path):
     ok.write_bytes(_enc_blob("OSMHeader", opt_header)
                    + _enc_blob("OSMData", data))
     assert parse_pbf(spark, str(ok)).count() == 1
+
+
+def test_negative_way_and_relation_ids_roundtrip(spark, tmp_path):
+    """Way and Relation ids are int64 fields: negative ids (unsaved
+    editor objects) go on the wire as 64-bit two's complement and must
+    decode back to the same negative numbers. The writer runs in a
+    child process with a timeout, so an encoder that spins on a
+    negative varint fails this test instead of hanging the suite."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    path = str(tmp_path / "neg.osm.pbf")
+    elements = [
+        {"kind": "node", "id": 1, "lon": 1.0, "lat": 2.0, "tags": {}},
+        {"kind": "way", "id": -7, "node_refs": [1], "tags": {"k": "v"}},
+        {"kind": "relation", "id": -9, "tags": {},
+         "members": [{"ref": -7, "type": "way", "role": "outer"}]},
+    ]
+    child = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from osm_jl_spark.sources.osm_pbf import _enc_uvarint, write_pbf\n"
+        "try:\n"
+        "    _enc_uvarint(-1)\n"
+        "    sys.exit('negative uvarint accepted')\n"
+        "except ValueError:\n"
+        "    pass\n"
+        f"write_pbf(sys.argv[2], {elements!r})\n"
+    )
+    repo = str(Path(__file__).resolve().parent.parent)
+    subprocess.run(
+        [sys.executable, "-c", child, repo, path], check=True, timeout=30
+    )
+    _, ways, rels = split_elements(parse_pbf(spark, path))
+    assert [(r.id, list(r.node_refs)) for r in ways.collect()] == [(-7, [1])]
+    got = rels.collect()
+    assert [r.id for r in got] == [-9]
+    assert [(m.ref, m.type) for m in got[0].members] == [(-7, "way")]

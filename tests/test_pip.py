@@ -1,10 +1,12 @@
-"""Point-in-polygon parity: vectorized NumPy kernel and the Spark
-spatial join vs the pure-Python port of src/coords.jl:69-78."""
+"""Point-in-polygon parity: the native even-odd expressions (unrolled
+CASE and edges-array fold) and the Spark spatial join vs the
+pure-Python port of src/coords.jl:69-78."""
 
 import numpy as np
+import pytest
 
 from osm_jl_spark.datagen import FROGNER, OSLO_PENT, POLYGONS, VITORIA_TRI
-from osm_jl_spark.functions.geo import cell_cover, pip_mask
+from osm_jl_spark.functions.geo import cell_cover
 from osm_jl_spark.oracle import point_in_polygon
 
 
@@ -19,29 +21,25 @@ def _grid(ring, n=25):
     return pts[:, 0], pts[:, 1]
 
 
-def test_pip_mask_matches_oracle():
+def test_native_pip_matches_oracle_on_grid(native_pip):
     for ring in (FROGNER, VITORIA_TRI, OSLO_PENT):
-        lon, lat = _grid(ring)
-        got = pip_mask(lon, lat, ring)
-        want = np.array(
-            [point_in_polygon(x, y, ring) for x, y in zip(lon, lat)]
-        )
-        assert (got == want).all()
+        pts = list(zip(*_grid(ring)))
+        want = [point_in_polygon(x, y, ring) for x, y in pts]
+        assert native_pip(ring, pts) == list(zip(want, want))
+        assert any(want) and not all(want)
 
 
-def test_pip_boundary_vertices():
+def test_pip_boundary_vertices(native_pip):
     # strict-inequality semantics on the fixture's exact vertices and
-    # edge midpoints must agree between NumPy and the oracle port
+    # edge midpoints must agree between both native paths and the
+    # oracle port
     ring = FROGNER
     pts = list(ring)
     for i in range(len(ring)):
         a, b = ring[i - 1], ring[i]
         pts.append(((a[0] + b[0]) / 2, (a[1] + b[1]) / 2))
-    lon = np.array([p[0] for p in pts])
-    lat = np.array([p[1] for p in pts])
-    got = pip_mask(lon, lat, ring)
-    want = np.array([point_in_polygon(x, y, ring) for x, y in pts])
-    assert (got == want).all()
+    want = [point_in_polygon(x, y, ring) for x, y in pts]
+    assert native_pip(ring, pts) == list(zip(want, want))
 
 
 def test_cell_cover_classification():
@@ -86,23 +84,6 @@ def test_spark_spatial_join_matches_oracle(spark):
     assert want  # fixture must actually produce matches
 
 
-def test_native_pip_expr_matches_udf_path(spark):
-    """exact='native' (literal-edge aggregate fold in codegen) and
-    exact='udf' (Arrow/NumPy kernel) must emit identical join rows —
-    both are bit-level ports of src/coords.jl:69-78."""
-    from osm_jl_spark.datagen import load_pages_points
-    from osm_jl_spark.operators.joins import nodes_in_polygons
-
-    pts = load_pages_points(spark, 400)
-    key = lambda r: (r["url"], r["pt_idx"], r["polygon_id"])  # noqa: E731
-    nat = {key(r) for r in nodes_in_polygons(pts, POLYGONS, 2).collect()}
-    udf = {
-        key(r)
-        for r in nodes_in_polygons(pts, POLYGONS, 2, exact="udf").collect()
-    }
-    assert nat == udf and len(nat) > 0
-
-
 def test_shoelace_area2_square_and_degenerate(spark):
     from pyspark.sql import functions as F
 
@@ -126,33 +107,38 @@ def test_shoelace_area2_square_and_degenerate(spark):
     assert got == {1: 4, 2: -4, 3: 0}
 
 
-def test_edges_fold_matches_unrolled_and_udf(spark):
-    """All three exact-test modes (unrolled codegen CASE, edges-array
-    fold, Arrow kernel) must emit identical join rows on the same
-    polygon set — the fold is the many-polygon scale path and must be
-    a bit-level equivalent, not an approximation."""
-    from osm_jl_spark.datagen import load_pages_points, polygon_grid
-    from osm_jl_spark.operators.joins import nodes_in_polygons
+@pytest.mark.parametrize("limit", [0, 1000])
+@pytest.mark.parametrize("polys_name", ["POLYGONS", "polygon_grid"])
+def test_exact_pip_paths_match_oracle(
+    spark, monkeypatch, polys_name, limit
+):
+    """Both exact-test paths — the unrolled codegen CASE (forced with
+    UNROLL_LIMIT=1000, even at 96 polygons) and the edges-array fold
+    (forced with UNROLL_LIMIT=0, even at 3 polygons) — must emit
+    exactly the oracle's join rows on the fixture polygons and on the
+    96-square grid: the fold is the many-polygon scale path and must
+    be a bit-level equivalent, not an approximation."""
+    from osm_jl_spark import datagen as G
+    from osm_jl_spark.operators import joins
 
-    pts = load_pages_points(spark, 400)
-    polys = polygon_grid()
-    key = lambda r: (r["url"], r["pt_idx"], r["polygon_id"])  # noqa: E731
-    # force each mode explicitly (unroll_limit high enough to keep
-    # 'native' unrolled even at 96 polygons)
-    unrolled = {
-        key(r) for r in nodes_in_polygons(
-            pts, polys, 2, exact="native", unroll_limit=1000
-        ).collect()
+    polys = G.POLYGONS if polys_name == "POLYGONS" else G.polygon_grid()
+    pts = G.load_pages_points(spark, 400)
+    monkeypatch.setattr(joins, "UNROLL_LIMIT", limit)
+    joined = joins.nodes_in_polygons(pts, polys, 2)
+    # the patched limit really picked the path: only the fold broadcasts
+    # an edges column
+    plan = joined._jdf.queryExecution().optimizedPlan().toString()
+    assert ("edges" in plan) == (limit == 0)
+    got = {
+        (r["url"], r["pt_idx"], r["polygon_id"]) for r in joined.collect()
     }
-    fold = {
-        key(r)
-        for r in nodes_in_polygons(pts, polys, 2, exact="edges").collect()
+    want = {
+        (r["url"], r["pt_idx"], pid)
+        for r in pts.collect()
+        for pid, ring in polys.items()
+        if point_in_polygon(r["lon"], r["lat"], ring)
     }
-    udf = {
-        key(r)
-        for r in nodes_in_polygons(pts, polys, 2, exact="udf").collect()
-    }
-    assert unrolled == fold == udf and len(fold) > 0
+    assert got == want and len(want) > 0
 
 
 def test_continent_scale_polygon_range_join_path(spark):

@@ -73,9 +73,8 @@ def test_flagship_cover_join_broadcasts(spark, pages_parquet):
 
 def test_flagship_zero_python_operators(spark, pages_parquet):
     """The entire flagship plan is Python-free: geoparse is a JVM
-    regexp kernel and the exact PIP test is a literal-edge aggregate
-    fold — everything runs in whole-stage codegen. (The Arrow/pandas
-    kernels survive as parity references, unused in this plan.)"""
+    regexp kernel and the exact PIP test is an unrolled per-edge CASE
+    over literal edges — everything runs in whole-stage codegen."""
     from osm_jl_spark import datagen as G
     from osm_jl_spark.operators.pipeline import flagship
 

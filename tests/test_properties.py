@@ -1,7 +1,7 @@
-"""Property-based tests (hypothesis): the NumPy kernels must agree with
-the pure-Python reference ports on arbitrary inputs — not just the
-fixture polygons. No Spark session needed; these pin the numeric core
-that every distributed operator builds on."""
+"""Property-based tests (hypothesis): the shipped kernels must agree
+with the pure-Python reference ports on arbitrary inputs — not just the
+fixture polygons. These pin the numeric core that every distributed
+operator builds on; only the PIP property needs the Spark session."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from osm_jl_spark.functions.geo import pip_mask
 from osm_jl_spark.oracle import coord2index, point_in_polygon
 
 coord = st.floats(
@@ -46,18 +45,17 @@ def ring_and_points(draw):
 
 
 @given(ring_and_points())
-@settings(max_examples=200, deadline=None)
-def test_pip_mask_matches_scalar_reference_port(data):
-    """The vectorized NumPy even-odd mask must equal the scalar port of
-    src/coords.jl:69-78 for every point against ANY ring — including
-    degenerate (self-intersecting, zero-area) rings, where both must
-    agree because the reference defines truth by this exact loop."""
+@settings(max_examples=30, deadline=None)
+def test_native_pip_matches_scalar_reference_port(native_pip, data):
+    """Both shipped even-odd expressions (pip_ring_expr, the unrolled
+    CASE path, and pip_edges_fold_expr, the many-polygon path) must
+    equal the scalar port of src/coords.jl:69-78 for every point
+    against ANY ring — including degenerate (self-intersecting,
+    zero-area) rings, where they must agree because the reference
+    defines truth by this exact loop. One Spark job per example."""
     ring, pts = data
-    lons = np.array([p[0] for p in pts])
-    lats = np.array([p[1] for p in pts])
-    got = pip_mask(lons, lats, ring)
     want = [point_in_polygon(lon, lat, ring) for lon, lat in pts]
-    assert list(got) == want
+    assert native_pip(ring, pts) == list(zip(want, want))
 
 
 @given(

@@ -15,7 +15,7 @@ def test_extract_text_byte_identical(spark):
     rows = ext.collect()
     assert len(rows) == 300
     for r in rows:
-        # Spark UDF output == stored text == single-node oracle output
+        # native Spark output == stored text == single-node oracle output
         assert r["extracted_text"] == r["text"], r["url"]
         assert extract_text(bytes(r["html"])) == r["text"], r["url"]
 
@@ -72,27 +72,26 @@ def test_lang_id_and_quality_cols(spark):
     assert rows[0]["bt"] >= rows[0]["nt"]
 
 
-def test_native_kernels_match_udf_kernels(spark):
-    """The JVM-native geoparse/extract kernels must emit exactly the
-    rows of the Arrow/pandas reference kernels (which in turn are
-    pinned byte-identical to the single-node oracle)."""
-    from osm_jl_spark.datagen import load_pages
-    from osm_jl_spark.operators.pipeline import (
-        geoparse_points,
-        geoparse_points_from_html,
-        geoparse_points_from_html_udf,
-        geoparse_points_udf,
-    )
+def test_native_geoparse_kernels_match_oracle(spark):
+    """The JVM-native geoparse kernels — over the stored text and fused
+    over the html payload — must emit exactly the oracle's points,
+    keyed per url and pt_idx: geoparse(extract_text(html)) enumerated
+    in order of appearance."""
+    from osm_jl_spark.operators.pipeline import geoparse_points_from_html
 
     pages = load_pages(spark, 500)
-    a = sorted(tuple(r) for r in geoparse_points(pages).collect())
-    b = sorted(tuple(r) for r in geoparse_points_udf(pages).collect())
-    assert a == b and len(a) > 100
-    c = sorted(tuple(r) for r in geoparse_points_from_html(pages).collect())
-    d = sorted(
-        tuple(r) for r in geoparse_points_from_html_udf(pages).collect()
+    want = sorted(
+        (r["url"], i, lon, lat)
+        for r in pages.select("url", "html").collect()
+        for i, (lon, lat) in enumerate(
+            geoparse(extract_text(bytes(r["html"])))
+        )
     )
-    assert c == d == a
+    assert len(want) > 100
+    assert sorted(tuple(r) for r in geoparse_points(pages).collect()) == want
+    assert sorted(
+        tuple(r) for r in geoparse_points_from_html(pages).collect()
+    ) == want
 
 
 def test_fused_geoparse_html_matches_two_stage(spark):

@@ -15,8 +15,10 @@ on a 1000-executor cluster:
   (polygon cover, customer, cover cells) must broadcast — a shuffle of
   the 10^12-row fact side is the difference between minutes and days.
 - **Whole-stage codegen** (`WholeStageCodegen`): native expressions
-  stay fused in generated JVM code; only the declared pandas UDFs
-  (geoparse, exact PIP) appear as `ArrowEvalPython`/`MapInPandas`.
+  stay fused in generated JVM code; geoparse and the exact PIP test
+  are native, so only the declared Arrow kernels (PBF/XML decode,
+  Douglas-Peucker, media decode) appear as
+  `ArrowEvalPython`/`MapInPandas`.
 - **Exchange count**: shuffles are the scale bottleneck; each audited
   query documents how many it needs and why.
 
